@@ -1,5 +1,6 @@
 package graft
 
+import graft.exec.Checkpoint
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -106,7 +107,7 @@ object IncrementalScaleProbe {
       SimilarityQueries.incrementalNeardupAt(spark, dir, cutoff)
         .select("a", "b").collect())
     require(pairsCold.isEmpty, "pre-append run emitted pairs with an empty delta")
-    require(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    require(Checkpoint.Indexes.isWarm(spark, SimilarityQueries.nd12Key(spark, dir, cutoff)),
       "old-bands index not committed after the cold build")
     println(f"PROBE s12 cpus=$cpus index build (old=$cutoff docs) wall=$wCold%.2f")
 
@@ -119,7 +120,7 @@ object IncrementalScaleProbe {
     val deltaN = n - cutoff
     println(s"PROBE delta batch appended: $deltaN docs " +
       s"(5000 cross, 2000 newnew, 3000 boilerplate)")
-    require(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    require(Checkpoint.Indexes.isWarm(spark, SimilarityQueries.nd12Key(spark, dir, cutoff)),
       "tail append invalidated the old-bands index — warm path unreachable")
     // post-append, the default id-tail cutoff rule resolves to the same
     // pinned boundary, so the registered production query is usable as-is
@@ -200,7 +201,7 @@ object IncrementalScaleProbe {
       SimilarityQueries.incrementalKeeperAt(spark, dir, cutoff)
         .filter(col("is_dropped")).count())
     val (_, wK13Build) = s13()
-    require(SimilarityQueries.nd13KeepersAreWarm(spark, dir, cutoff),
+    require(Checkpoint.Indexes.isWarm(spark, SimilarityQueries.nd13Key(spark, dir, cutoff)),
       "old-keeper table not committed after the build run")
     val (nDropped, wK13) = s13()
     println(f"PROBE s13 cpus=$cpus keeper_build_run=$wK13Build%.2f warm=$wK13%.2f " +

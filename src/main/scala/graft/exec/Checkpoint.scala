@@ -15,9 +15,13 @@ import java.nio.charset.StandardCharsets
   *   <root>/<stage>/lineage   (runId, stage, snapshotId, partitionId,
   *                             rowCount, wallMs) one row per partition
   *   <root>/<stage>/_SUCCESS_SNAPSHOT  the snapshot id the data is for
-  * A stage recomputes only when its recorded snapshot id differs from the
-  * current input snapshot id; otherwise the data table is read back and
-  * the upstream plan is skipped entirely.
+  *                                     (`snapshot@version`, then `rows=N`)
+  * A stage recomputes unless its marker carries the current input
+  * snapshot id AND a rows line (see [[Checkpoint#stage]]); otherwise the
+  * data table is read back and the upstream plan is skipped entirely.
+  * This is the ONE lifecycle for pipeline stages and the persisted
+  * similarity indexes alike ([[Checkpoint.Indexes]], keyed via
+  * [[Fingerprint.key]]).
   *
   * Emulates Iceberg-style snapshot/commit semantics over plain parquet
   * (no Iceberg runtime ships offline — SURVEY.md §7.4 risk 3); the
@@ -53,33 +57,16 @@ final case class Checkpoint(root: String, runId: String,
     finally out.close()
   }
 
-  // First marker line only: rows=N (when present) trails on line 2.
-  // nextOption: a torn writeSmall can leave a 0-byte marker — that must
-  // read as "no completed snapshot" (stage rebuilds and rewrites the
-  // marker), not crash every later stage() call on this stage.
-  def completedSnapshot(spark: SparkSession, stage: String): Option[String] =
-    readSmall(spark, marker(stage)).flatMap(_.linesIterator.nextOption()).map(_.trim)
-
-  /** Row count recorded in the stage marker at commit time — lets a
-    * reader validate a shared-root stage table against its committed
-    * size WITHOUT scanning the data (the s04 read-back `count()` this
-    * replaces was an O(N) job taxing every probe query). None for
-    * markers written before the rows line existed AND for malformed /
-    * torn rows lines (both mean "unvalidatable" — the reader
-    * invalidates and rebuilds once, which rewrites a clean marker).
-    */
-  def committedRowCount(spark: SparkSession, stage: String): Option[Long] =
-    committedMarker(spark, stage).flatMap(_._2)
-
   /** ONE atomic parse of the stage marker: (snapshot line, rows). The
     * rows count is only meaningful paired with the snapshot it was
     * committed under — on a shared unlocked root, reading them through
-    * two separate calls lets a concurrent writer swap the marker
-    * in between, so a rows check could pass against a DIFFERENT
-    * snapshot's data. Validating readers go through
-    * [[committedRowsFor]], which checks both from this single read.
+    * two separate calls lets a concurrent writer swap the marker in
+    * between, so a rows check could pass against a DIFFERENT snapshot's
+    * data (round-4 ADVICE #3). A torn writeSmall can leave a 0-byte
+    * marker or a malformed rows line: both parse as "no rows", which
+    * never validates.
     */
-  def committedMarker(spark: SparkSession, stage: String): Option[(String, Option[Long])] =
+  private def committedMarker(spark: SparkSession, stage: String): Option[(String, Option[Long])] =
     readSmall(spark, marker(stage)).map { content =>
       val lines = content.linesIterator.toSeq
       (lines.headOption.map(_.trim).getOrElse(""),
@@ -89,8 +76,8 @@ final case class Checkpoint(root: String, runId: String,
 
   /** Rows recorded for `stage` IFF the marker's snapshot line matches
     * `snapshotId` under the current pipeline version — None when the
-    * marker is absent, torn, for another snapshot, or predates the
-    * rows line. Single marker read (see [[committedMarker]]).
+    * marker is absent, torn, for another snapshot, or carries no rows
+    * line. Single marker read (see [[committedMarker]]).
     */
   def committedRowsFor(spark: SparkSession, stage: String, snapshotId: String): Option[Long] =
     committedMarker(spark, stage) match {
@@ -106,8 +93,17 @@ final case class Checkpoint(root: String, runId: String,
   // schema change.
   private def markerContent(snapshotId: String) = s"$snapshotId@$version"
 
+  /** THE completeness rule, shared by [[stage]] and every reader: one
+    * marker read shows this `snapshot@version` AND a rows line.
+    */
   def isComplete(spark: SparkSession, stage: String, snapshotId: String): Boolean =
-    completedSnapshot(spark, stage).contains(markerContent(snapshotId))
+    committedRowsFor(spark, stage, snapshotId).nonEmpty
+
+  /** [[isComplete]] for a persisted index's key: true means the next
+    * stage() call for it reads back instead of building.
+    */
+  def isWarm(spark: SparkSession, key: StageKey): Boolean =
+    isComplete(spark, key.name, key.snapshot)
 
   /** Drop a stage's completion marker so the next stage() call
     * recomputes — the escape hatch for a reader that detects a corrupt
@@ -120,55 +116,94 @@ final case class Checkpoint(root: String, runId: String,
     if (f.exists(m)) f.delete(m, false)
   }
 
-  /** Run `compute` unless this (stage, snapshotId) already committed;
-    * either way return the stage's data as a DataFrame read from the
-    * checkpoint table (so downstream plans cut lineage here).
+  /** Run `compute` unless this (stage, snapshotId) already committed a
+    * valid table; either way return the stage's data as a DataFrame read
+    * from the checkpoint table (so downstream plans cut lineage here).
+    *
+    * Valid = [[isComplete]], and when `expectedRows` is given the
+    * committed rows must also equal it — the marker's rows line is an
+    * O(1) read that already happens, so a torn overwrite or a
+    * concurrent-writer race that committed a short/stale table (or a
+    * torn marker with no rows line) is caught WITHOUT re-counting the
+    * data (the round-3 s04 read-back `count()` this replaces re-scanned
+    * all N index rows on every query). Anything else invalidates the
+    * marker, rebuilds ONCE and re-validates: still invalid is a hard
+    * failure — something is actively corrupting the root, and serving a
+    * silent wrong table is worse than dying.
+    *
+    * Scope (deliberate): this validates the COMMIT — marker and data
+    * written by the same completed stage() — not the data files'
+    * continued integrity. A writer that starts overwriting the data dir
+    * after commit and dies mid-write fails the reader LOUDLY (missing
+    * part files -> read error), not silently; catching it pre-read would
+    * require re-counting the table per read, the O(N) tax this design
+    * removes.
     */
   def stage(spark: SparkSession, stageName: String, snapshotId: String,
-      partitionByCols: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
-    if (!isComplete(spark, stageName, snapshotId)) {
-      val t0 = System.nanoTime()
-      val df = compute
-      // Per-partition lineage rows collected on executors during the write
-      // pass (one extra column, dropped from the data table).
-      val withPart = df.withColumn("__pid", spark_partition_id())
-      withPart.persist()
-      val writer = withPart.drop("__pid").write.mode("overwrite")
-      (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
-        .parquet(s"${stageDir(stageName)}/data")
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      // North-rule lineage shape: when the stage data carries provenance
-      // columns, record the per-partition input files and content hashes
-      // alongside the row count.
-      val provenanceAggs =
-        (if (df.columns.contains("path"))
-          Seq(collect_list(col("path")).as("inputFiles")) else Nil) ++
-        (if (df.columns.contains("sha256"))
-          Seq(collect_list(col("sha256")).as("sha256s")) else Nil)
-      val lineage = withPart.groupBy(col("__pid").as("partitionId"))
-        .agg(count(lit(1)).as("rowCount"), provenanceAggs: _*)
-        .withColumn("runId", lit(runId))
-        .withColumn("stage", lit(stageName))
-        .withColumn("snapshotId", lit(snapshotId))
-        .withColumn("wallMs", lit(wallMs))
-      lineage.write.mode("overwrite").parquet(s"${stageDir(stageName)}/lineage")
-      // total rows from the cached frame (cheap — withPart is persisted);
-      // recorded on the marker's second line so index readers can
-      // validate a committed stage in O(1)
-      val totalRows = withPart.count()
-      withPart.unpersist()
-      // schema sidecar BEFORE the marker: an empty partitioned stage
-      // writes no schema-bearing parquet file, so the read-back below
-      // (and in every resumed run) needs the recorded schema to avoid an
-      // inference failure
-      writeSmall(spark, schemaFile(stageName), withPart.drop("__pid").schema.json)
-      writeSmall(spark, marker(stageName),
-        s"${markerContent(snapshotId)}\nrows=$totalRows")
+      partitionByCols: Seq[String] = Nil, expectedRows: Option[Long] = None)(
+      compute: => DataFrame): DataFrame = {
+    def valid(rows: Option[Long]) = rows.exists(r => expectedRows.forall(_ == r))
+    val committed = committedMarker(spark, stageName).filter(_._1 == markerContent(snapshotId))
+    val rows = committed.flatMap(_._2)
+    if (!valid(rows)) {
+      if (committed.nonEmpty)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"stage $stageName failed marker validation (committed=$rows " +
+            s"expected=${expectedRows.getOrElse("a rows line")}) — rebuilding")
+      // marker first: a rewrite that dies mid-write must not leave this
+      // snapshot's marker standing over partial data
+      invalidate(spark, stageName)
+      write(spark, stageName, snapshotId, partitionByCols, compute)
+      val after = committedRowsFor(spark, stageName, snapshotId)
+      require(valid(after), s"stage $stageName still invalid after rebuild " +
+        s"(committed=$after expected=${expectedRows.getOrElse("a rows line")}) — " +
+        "something is actively corrupting the checkpoint root")
     }
     val reader = readSmall(spark, schemaFile(stageName))
       .map(j => spark.read.schema(DataType.fromJson(j).asInstanceOf[StructType]))
       .getOrElse(spark.read)
     reader.parquet(s"${stageDir(stageName)}/data")
+  }
+
+  private def write(spark: SparkSession, stageName: String, snapshotId: String,
+      partitionByCols: Seq[String], compute: => DataFrame): Unit = {
+    val t0 = System.nanoTime()
+    val df = compute
+    // Per-partition lineage rows collected on executors during the write
+    // pass (one extra column, dropped from the data table).
+    val withPart = df.withColumn("__pid", spark_partition_id())
+    withPart.persist()
+    val writer = withPart.drop("__pid").write.mode("overwrite")
+    (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
+      .parquet(s"${stageDir(stageName)}/data")
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    // North-rule lineage shape: when the stage data carries provenance
+    // columns, record the per-partition input files and content hashes
+    // alongside the row count.
+    val provenanceAggs =
+      (if (df.columns.contains("path"))
+        Seq(collect_list(col("path")).as("inputFiles")) else Nil) ++
+      (if (df.columns.contains("sha256"))
+        Seq(collect_list(col("sha256")).as("sha256s")) else Nil)
+    val lineage = withPart.groupBy(col("__pid").as("partitionId"))
+      .agg(count(lit(1)).as("rowCount"), provenanceAggs: _*)
+      .withColumn("runId", lit(runId))
+      .withColumn("stage", lit(stageName))
+      .withColumn("snapshotId", lit(snapshotId))
+      .withColumn("wallMs", lit(wallMs))
+    lineage.write.mode("overwrite").parquet(s"${stageDir(stageName)}/lineage")
+    // total rows from the cached frame (cheap — withPart is persisted);
+    // recorded on the marker's second line so readers validate a
+    // committed stage in O(1)
+    val totalRows = withPart.count()
+    withPart.unpersist()
+    // schema sidecar BEFORE the marker: an empty partitioned stage
+    // writes no schema-bearing parquet file, so the read-back (in this
+    // and every resumed run) needs the recorded schema to avoid an
+    // inference failure
+    writeSmall(spark, schemaFile(stageName), withPart.drop("__pid").schema.json)
+    writeSmall(spark, marker(stageName),
+      s"${markerContent(snapshotId)}\nrows=$totalRows")
   }
 
   def lineage(spark: SparkSession, stageName: String): DataFrame =
@@ -188,4 +223,13 @@ object Checkpoint {
     * corpus the (generator, size) pair identifies the snapshot.
     */
   def snapshotId(tag: String, n: Long): String = s"$tag-$n"
+
+  /** The shared root of the persisted similarity indexes (ANN indexes,
+    * near-dup pair/band/keeper tables) — ONE value, resolved once from
+    * GRAFT_ANN_INDEX_ROOT (default under java.io.tmpdir).
+    */
+  lazy val Indexes: Checkpoint = Checkpoint(
+    sys.env.getOrElse("GRAFT_ANN_INDEX_ROOT",
+      s"${System.getProperty("java.io.tmpdir")}/graft_ann_index"),
+    "ann-index")
 }

@@ -43,8 +43,11 @@ object FastPng {
     val zbuf = new Array[Byte](raw.length + 64)
     var zlen = 0
     while (!deflater.finished()) {
-      if (zlen == zbuf.length) // incompressible residue: grow rarely
-        return encodeWith(w, h, raw, growDeflate(raw))
+      if (zlen == zbuf.length) { // incompressible residue: grow rarely
+        deflater.end()
+        val z = growDeflate(raw)
+        return buildStream(w, h, z, z.length)
+      }
       zlen += deflater.deflate(zbuf, zlen, zbuf.length - zlen)
     }
     deflater.end()
@@ -60,9 +63,6 @@ object FastPng {
     d.end()
     out.toByteArray
   }
-
-  private def encodeWith(w: Int, h: Int, raw: Array[Byte], z: Array[Byte]): Array[Byte] =
-    buildStream(w, h, z, z.length)
 
   private def buildStream(w: Int, h: Int, z: Array[Byte], zlen: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(zlen + 64)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.exec.{Checkpoint, Fingerprint, StageKey}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.stages.EntityLink
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -302,22 +303,19 @@ object SimilarityQueries {
     * are a pure function of the documents table, but every execution
     * (and s10, which runs s01 inside its keeper composition) was
     * re-shingling and re-joining the whole corpus. Same pattern as
-    * s06's persisted blocking table, keyed on [[docsSnapshot]] (count +
-    * id-sum + sampled-content hash + recursive file-status listing), so
-    * any rewrite of the documents table invalidates and rebuilds once.
-    * The pair table is metadata-sized (near-dup pairs, not documents),
-    * so the steady-state read is trivially cheap; marker-gated via
-    * [[markedStage]] (expected rows are unknowable up front for a pair
-    * table, so the guard is "rows line present for THIS snapshot" —
-    * catching torn markers — rather than an exact-count compare).
+    * s06's persisted blocking table, keyed on the documents table's
+    * [[Fingerprint.table]] id (count + id-sum + sampled-content hash +
+    * recursive file-status listing), so any rewrite of the documents
+    * table invalidates and rebuilds once. The pair table is
+    * metadata-sized (near-dup pairs, not documents), so the steady-state
+    * read is trivially cheap; no expectedRows (unknowable up front for a
+    * pair table), so the marker guard is the rows line for THIS snapshot
+    * — catching torn markers — rather than an exact-count compare.
     */
   private[graft] def verifiedNeardupPairs(s: SparkSession, dir: String): DataFrame = {
-    implicit val sp = s
-    val (_, snap) = docsSnapshot(dir)
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    markedStage(s, ck, s"nd01_pairs_${dirTag(dir)}", snap) {
-      computeNeardupPairs(s, dir)
-    }
+    val key = Fingerprint.key("nd01_pairs", dir,
+      Fingerprint.table(s, dir, "documents.parquet", "doc_id", "text")._2, "v1")
+    Checkpoint.Indexes.stage(s, key.name, key.snapshot)(computeNeardupPairs(s, dir))
   }
 
   private val minhashDedup: Q = (s, dir) =>
@@ -341,86 +339,31 @@ object SimilarityQueries {
     */
   private[graft] def incrementalCutoff(s: SparkSession, dir: String): Long = {
     implicit val sp = s
-    // memoized on (dir, file-status fingerprint) exactly like
-    // snapshotCache (round 6): the cutoff is a pure function of the
-    // documents table, and the metadata-only listing ALWAYS re-runs and
-    // gates reuse — any rewrite/append changes the fingerprint and
-    // forces a fresh max() scan, so no result survives a data change
-    cutoffCache.getOrElseUpdate((dir, fileStatusFp(dir, "documents.parquet")),
-      docs(dir).agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) / 10 * 9)
+    // memoized in the per-session fingerprint memo (VERDICT #8): the
+    // cutoff is a pure function of the documents table, and the
+    // metadata-only listing ALWAYS re-runs and gates reuse — any
+    // rewrite/append forces a fresh max() scan, so no result survives a
+    // data change
+    Fingerprint.memo(s, dir, "documents.parquet", "cutoff") { _ =>
+      docs(dir).agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) / 10 * 9
+    }
   }
 
-  private val cutoffCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
-
-  /** Fingerprint of the documents SLICE doc_id < cutoff — the identity
-    * the s12 old-bands index is keyed on. Keying on the whole-table
-    * [[docsSnapshot]] would make ANY append invalidate the index, so
-    * the warm O(delta) path would exist only for a byte-identical
-    * table — while the production sequence s12 exists for (append a
-    * batch, dedup it against the indexed old corpus) paid a full O(N)
-    * re-shingle every batch.
-    *
-    * Terms: the slice's logical identity (count + id-set hash) PLUS a
-    * file-status fold over exactly the parquet files that CARRY a
-    * sub-cutoff row (per-file min doc_id from the same single id-column
-    * scan). Any change to old content — wherever it lives, however
-    * performed — must rewrite one of those files (new length/mtime/
-    * name), so the snapshot moves; appended delta-only files never
-    * enter the fold, so a tail append leaves the committed marker
-    * valid. This is strictly stronger than a sampled content hash (an
-    * in-place rewrite of ANY old doc invalidates, not just one inside
-    * the sample window) and cheaper: one doc_id-only scan, no text
-    * read. Conservative edge: rewriting a MIXED file (old + delta rows
-    * written together) for a delta-side reason rebuilds unnecessarily —
-    * correctness-safe. The whole-table file listing is the MEMO key
-    * only: any file change re-runs the cheap fingerprint job; only a
-    * change to old-bearing files changes the snapshot string.
+  /** The s12 old-bands stage key, on the documents SLICE doc_id < cutoff
+    * ([[Fingerprint.slice]]): keying on the whole-table fingerprint would
+    * make ANY append invalidate the index, so the warm O(delta) path
+    * would exist only for a byte-identical table — while the production
+    * sequence s12 exists for (append a batch, dedup it against the
+    * indexed old corpus) paid a full O(N) re-shingle every batch.
     */
-  private def docsSliceSnapshot(dir: String, cutoff: Long)(implicit s: SparkSession): String = {
-    val fileFp = fileStatusFp(dir, "documents.parquet")
-    snapshotCache.getOrElseUpdate((s"$dir#documents<$cutoff", fileFp), {
-      val perFile = docs(dir)
-        .select(input_file_name().as("f"), col("doc_id"))
-        .groupBy("f").agg(
-          min(col("doc_id")).as("minId"),
-          count(when(col("doc_id") < cutoff, 1)).as("n"),
-          coalesce(sum(when(col("doc_id") < cutoff, hash(col("doc_id")))), lit(0L))
-            .as("idsum"))
-        .collect()
-      def norm(p: String): String =
-        new org.apache.hadoop.fs.Path(p).toUri.getPath
-      val n = perFile.map(_.getLong(2)).sum
-      val idsum = perFile.map(_.getLong(3)).sum
-      val oldFiles = perFile.filter(_.getLong(1) < cutoff).map(r => norm(r.getString(0))).toSet
-      val oldFp = foldStatuses(fileStatusList(dir, "documents.parquet")
-        .filter { case (p, _, _) => oldFiles(norm(p)) })
-      (n, s"$n-$idsum-of$oldFp")
-    })._2
-  }
-
-  /** The old-bands stage's snapshot id — ONE construction shared by
-    * [[nd12Bands]] and the [[nd12IndexIsWarm]] spec hook (the
-    * [[ivfCentIdentity]] rationale: a format edit reaching only one
-    * site would make the warm-path spec probe a nonexistent marker).
-    */
-  private def nd12Snap(dir: String, cutoff: Long)(implicit s: SparkSession): String =
-    s"${docsSliceSnapshot(dir, cutoff)}-cut$cutoff-cap${Nd12Cap}r${Nd12Reps}v1"
-
-  /** Spec hook: is the s12 old-bands index currently committed and
-    * valid for (dir, cutoff) WITHOUT building it? True means the next
-    * incremental run takes the warm O(delta) path — the property the
-    * append-survival spec asserts across an ingest batch.
-    */
-  private[graft] def nd12IndexIsWarm(s: SparkSession, dir: String, cutoff: Long): Boolean = {
-    implicit val sp = s
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    ck.committedRowsFor(s, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff)).nonEmpty
-  }
+  private[graft] def nd12Key(s: SparkSession, dir: String, cutoff: Long): StageKey =
+    Fingerprint.key("nd12_bands", dir,
+      Fingerprint.slice(s, dir, "documents.parquet", "doc_id", cutoff),
+      s"cut$cutoff-cap${Nd12Cap}r${Nd12Reps}v1")
 
   /** The s12 incremental index: ONE persisted table of the OLD corpus's
     * band rows — (doc_id, band, bkey, n_old, is_rep) — keyed on the
-    * sub-cutoff SLICE snapshot ([[nd12Snap]]: a tail append leaves the
+    * sub-cutoff SLICE snapshot ([[nd12Key]]: a tail append leaves the
     * index valid; only a change to the old corpus itself, or a cutoff
     * move, rebuilds). `n_old` is the bucket's old-side
     * population (precomputed at build so a delta run never windows over
@@ -439,8 +382,8 @@ object SimilarityQueries {
   private def nd12Bands(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    markedStage(s, ck, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff)) {
+    val key = nd12Key(s, dir, cutoff)
+    Checkpoint.Indexes.stage(s, key.name, key.snapshot) {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
       val sized = bandedOf(old).withColumn("n_old",
@@ -587,8 +530,8 @@ object SimilarityQueries {
   private def nd13OldKeepers(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    markedStage(s, ck, s"nd13_keep_${dirTag(dir)}", s"${nd12Snap(dir, cutoff)}-keepv1") {
+    val key = nd13Key(s, dir, cutoff)
+    Checkpoint.Indexes.stage(s, key.name, key.snapshot) {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
       val sized = nd12Bands(s, dir, cutoff)
@@ -597,15 +540,11 @@ object SimilarityQueries {
     }
   }
 
-  /** Spec hook, twin of [[nd12IndexIsWarm]]: is the s13 old-keeper
-    * table committed and valid for (dir, cutoff) without building it?
+  /** The s13 old-keeper stage key: built from the s12 bands, so it
+    * carries their slice snapshot.
     */
-  private[graft] def nd13KeepersAreWarm(s: SparkSession, dir: String, cutoff: Long): Boolean = {
-    implicit val sp = s
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    ck.committedRowsFor(s, s"nd13_keep_${dirTag(dir)}",
-      s"${nd12Snap(dir, cutoff)}-keepv1").nonEmpty
-  }
+  private[graft] def nd13Key(s: SparkSession, dir: String, cutoff: Long): StageKey =
+    Fingerprint.key("nd13_keep", dir, nd12Key(s, dir, cutoff).snapshot, "keepv1")
 
   /** s13: INCREMENTAL dedup keeper — per-batch keeper assignments
     * WITHOUT re-running connected components over the full corpus's
@@ -852,18 +791,17 @@ object SimilarityQueries {
     import sp.implicits._
     val tables = 8
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
-    val (n, snapBase) = embSnapshot(dir)
+    val (n, snapBase) = embFp(s, dir)
     val bits = lshBits(n)
     val planes = lshPlanes(7000, tables, bits, dim = 64)
-    val snap = s"$snapBase-b$bits"
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
+    val key = Fingerprint.key("lsh8", dir, snapBase, s"b$bits")
     // NOT spreadBuild (unlike s06's nd8): s04's probe side is 10 query
     // vectors — the warm-path work per index row is trivial, and a
     // multi-file layout measured ~2.5x WORSE (32 near-empty tasks of
     // pure scheduling overhead vs one cheap task). s06 keeps the spread
     // because its probe side is the whole corpus (~1M candidate pairs).
-    val idx = validatedStage(s, ck, s"lsh8_${dirTag(dir)}", snap,
-        expectedRows = n * tables) {
+    val idx = Checkpoint.Indexes.stage(s, key.name, key.snapshot,
+        expectedRows = Some(n * tables)) {
       e.flatMap { case (id, v) =>
         (0 until tables).map(t => (id, t, lshBucket(v, planes(t))))
       }.toDF("vec_id", "tbl", "bucket")
@@ -916,252 +854,11 @@ object SimilarityQueries {
     if (df.rdd.getNumPartitions * 2 >= cores) df else df.repartition(cores)
   }
 
-  /** Root for persisted ANN index stages (overridable for tests). */
-  private def annIndexRoot: String =
-    sys.env.getOrElse("GRAFT_ANN_INDEX_ROOT",
-      s"${System.getProperty("java.io.tmpdir")}/graft_ann_index")
-
-  /** Checkpoint.stage + commit validation for the shared unlocked ANN
-    * index root: the committed row count recorded on the stage MARKER
-    * (an O(1) read that already happens) is compared to the expected
-    * size — a torn overwrite or concurrent-writer race that committed a
-    * short/stale table invalidates and rebuilds ONCE, and the rebuild is
-    * re-validated (hard failure if still wrong: something is actively
-    * corrupting the root, and serving a silent wrong index is worse than
-    * dying). Replaces the round-3 s04-only read-back `idx.count()`,
-    * which re-scanned all N index rows on EVERY query — at 100x data
-    * that O(N) job taxes each probe with the very cost the persisted
-    * index amortizes away. Markers predating the rows line validate as
-    * None and rebuild once (self-healing the format upgrade).
-    *
-    * Scope (deliberate): this validates the COMMIT — marker and data
-    * written by the same completed stage() — not the data files'
-    * continued integrity. A writer that starts overwriting the data dir
-    * after commit and dies mid-write fails the reader LOUDLY (missing
-    * part files -> read error), not silently; catching it pre-read
-    * would require re-counting the table per query, the exact O(N) tax
-    * this design removes.
+  /** Embeddings fingerprint ([[Fingerprint.table]]) keying the persisted
+    * ANN indexes (s04 LSH, s06 blocking, s07 IVF, s09 SQ8).
     */
-  private def validatedStage(s: SparkSession, ck: graft.exec.Checkpoint,
-      stageName: String, snap: String, expectedRows: Long,
-      partitionByCols: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
-    // snapshot + rows come from ONE marker read (committedRowsFor): on
-    // the shared unlocked root a concurrent writer committing the same
-    // stage for a DIFFERENT snapshot between stage() and a bare rows
-    // read could otherwise pass the count check against the other
-    // writer's data (round-4 ADVICE #3)
-    var df = ck.stage(s, stageName, snap, partitionByCols)(compute)
-    val committed = ck.committedRowsFor(s, stageName, snap)
-    if (!committed.contains(expectedRows)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ANN index stage $stageName failed marker row-count validation " +
-          s"(committed=$committed expected=$expectedRows) — rebuilding")
-      ck.invalidate(s, stageName)
-      df = ck.stage(s, stageName, snap, partitionByCols)(compute)
-      val after = ck.committedRowsFor(s, stageName, snap)
-      require(after.contains(expectedRows),
-        s"ANN index stage $stageName still invalid after rebuild " +
-          s"(committed=$after expected=$expectedRows)")
-    }
-    df
-  }
-
-  /** Marker-gated stage for tables whose row count is NOT knowable up
-    * front (s01's verified pair table): requires the committed marker to
-    * carry a rows line for the CURRENT snapshot (one atomic read —
-    * committedRowsFor), rebuilding once when it doesn't. Guards torn /
-    * pre-rows-format markers on the shared unlocked root; the exact
-    * count compare of [[validatedStage]] needs an externally derivable
-    * expected size, which index tables have (n x tables) and pair
-    * tables don't.
-    */
-  private def markedStage(s: SparkSession, ck: graft.exec.Checkpoint,
-      stageName: String, snap: String)(compute: => DataFrame): DataFrame = {
-    var df = ck.stage(s, stageName, snap)(compute)
-    if (ck.committedRowsFor(s, stageName, snap).isEmpty) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"stage $stageName marker carries no rows line for the current snapshot — rebuilding")
-      ck.invalidate(s, stageName)
-      df = ck.stage(s, stageName, snap)(compute)
-      require(ck.committedRowsFor(s, stageName, snap).nonEmpty,
-        s"stage $stageName still unvalidatable after rebuild — " +
-          "something is actively corrupting the checkpoint root")
-    }
-    df
-  }
-
-  /** s07's quantizer seed count — #(vec_id < k), not min(n, k), because
-    * nothing guarantees dense ids from 0 (a filtered/offset corpus would
-    * otherwise fail validation forever after a futile rebuild). Warm
-    * path: the committed centroid-stage marker already records exactly
-    * this value for the CURRENT snapshot (the stage writes one centroid
-    * row per seed) — an O(1) marker read, no Spark job (round-4 VERDICT
-    * #2: the old unconditional count ran on every query, even
-    * warm-index, through a non-pushable typed filter). Build path (or
-    * unvalidatable marker): count the pruned projection — the Column
-    * predicate pushes to the parquet scan, so the job reads the vec_id
-    * column of the few row groups holding the seeds, not the corpus.
-    * Returns (seedN, fromMarker) so the spec can assert the warm path
-    * launches no job.
-    */
-  private[graft] def ivfSeedCount(s: SparkSession, ck: graft.exec.Checkpoint,
-      centStage: String, snap: String, dir: String, k: Int): (Long, Boolean) = {
-    implicit val sp = s
-    ck.committedRowsFor(s, centStage, snap) match {
-      case Some(rows) if rows > 0 => (rows, true)
-      case _ =>
-        (embs(dir).filter(col("vec_id") < k).select("vec_id").count(), false)
-    }
-  }
-
-  /** Spec hook: does s07's seed count currently short-circuit to the
-    * committed centroid marker for `dir` (O(1) read, no count job)?
-    * Recomputes the same stage name / snapshot the query derives.
-    */
-  private[graft] def ivfSeedCountFromMarker(s: SparkSession, dir: String): Boolean = {
-    implicit val sp = s
-    val k = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "16").toInt
-    val (centStage, snap) = ivfCentIdentity(dir, k)
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    ivfSeedCount(s, ck, centStage, snap, dir, k)._2
-  }
-
-  /** The centroid stage's (stage name, snapshot id) — ONE construction
-    * shared by [[annIvf]] and the [[ivfSeedCountFromMarker]] spec hook.
-    * The two strings must stay byte-identical: a format edit reaching
-    * only one site would make the warm-path spec probe a nonexistent
-    * (or stale same-format) marker.
-    */
-  private def ivfCentIdentity(dir: String, k: Int)(implicit s: SparkSession): (String, String) = {
-    val (_, snapBase) = embSnapshot(dir)
-    (s"ivf${k}_cent_${dirTag(dir)}", s"$snapBase-k${k}i2")
-  }
-
-  /** Embeddings-snapshot fingerprint shared by the persisted ANN
-    * indexes (s04 LSH, s07 IVF, s09 SQ8): full count + id-set hash
-    * (vec_id column only — tiny) PLUS a content hash over the first 256
-    * embeddings (the filter pushes to the scan, so this reads a few
-    * row groups, not the corpus) PLUS a whole-table file-status
-    * fingerprint (name, length, mtime of every parquet part — a pure
-    * metadata LISTING, zero data read). The file signal closes the
-    * round-3 gap where a regenerated table with identical count, ids,
-    * and first 256 vectors but different later rows silently reused a
-    * stale index: any rewrite touches part files, so the snapshot id
-    * moves even when the sampled content doesn't. An exact full-content
-    * hash would re-scan all embeddings per query — the very cost a
-    * persisted index exists to amortize.
-    */
-  private def embSnapshot(dir: String)(implicit s: SparkSession): (Long, String) =
-    tableSnapshot(dir, "embeddings.parquet", embs(dir), "vec_id", "embedding")
-
-  /** Documents-table twin of [[embSnapshot]], keying s01's persisted
-    * pair table: count + doc_id-set hash + a content hash over the
-    * first 256 docs' texts (pushdown-pruned sample) + the recursive
-    * file-status fingerprint. The file signal alone catches any actual
-    * rewrite; the count/id/content terms make the snapshot string
-    * meaningful across roots and survive filesystems with coarse mtime.
-    */
-  private def docsSnapshot(dir: String)(implicit s: SparkSession): (Long, String) =
-    tableSnapshot(dir, "documents.parquet", docs(dir), "doc_id", "text")
-
-  /** ONE whole-table fingerprint recipe behind [[embSnapshot]] and
-    * [[docsSnapshot]] (they were hand-maintained twins — a recipe tweak
-    * reaching one copy would silently diverge staleness detection
-    * between the s01 pair table and the ANN indexes): count + id-set
-    * hash + content hash over ids < 256 (pushdown-pruned sample) +
-    * `-f` file-status fold. Memoized on (table-tagged dir, file fp):
-    * several index-backed queries in one Verify/Bench pass would
-    * otherwise each re-run the fingerprint aggregation jobs over an
-    * unchanged table; the metadata-only listing ALWAYS runs and gates
-    * reuse — any rewrite of the table changes the file fp and forces
-    * fresh aggregation jobs.
-    */
-  private def tableSnapshot(dir: String, table: String, df: DataFrame,
-      idCol: String, contentCol: String)(implicit s: SparkSession): (Long, String) = {
-    val fileFp = fileStatusFp(dir, table)
-    snapshotCache.getOrElseUpdate((s"$dir#$table", fileFp), {
-      // coalesce: a present-but-empty table fingerprints as empty
-      // instead of NPE-ing on a NULL sum
-      val fpRow = df.agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(hash(col(idCol))), lit(0L)).as("idsum")).head()
-      val n = fpRow.getLong(0)
-      val contentFp = df.filter(col(idCol) < 256)
-        .agg(coalesce(sum(hash(col(contentCol))), lit(0L))).head().getLong(0)
-      (n, s"$n-${fpRow.getLong(1)}-c$contentFp-f$fileFp")
-    })
-  }
-
-  // keyed (table-tagged dir, file fingerprint): embeddings and documents
-  // snapshots share the cache without colliding on the same dir
-  private val snapshotCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), (Long, String)]
-
-  /** Metadata-only table fingerprint: fold (path, len, modtime) of every
-    * data FILE under the table path (file or directory) — resolved
-    * through the Hadoop FS API so it works on hdfs:// roots too. The
-    * listing is RECURSIVE (listFiles(_, true)): a partitioned/nested
-    * layout's immediate children are subdirectories (length 0, directory
-    * mtime), so a flat listStatus would let an in-place rewrite that
-    * preserves entry names within mtime granularity keep a stale
-    * snapshot id (round-4 ADVICE #4); walking to the part files also
-    * future-proofs the staleness gate for partitioned source tables.
-    */
-  private[graft] def fileStatusFp(dir: String, table: String)(implicit s: SparkSession): Long =
-    foldStatuses(fileStatusList(dir, table))
-
-  /** ONE fold recipe over (path, len, mtime) listings — shared by the
-    * whole-table fingerprint and the old-slice subset fold so the two
-    * cannot drift on the hash recipe.
-    */
-  private def foldStatuses(files: Seq[(String, Long, Long)]): Long =
-    files.foldLeft(17L) { case (acc, (path, len, mtime)) =>
-      31L * (31L * (31L * acc + path.hashCode) + len) + mtime
-    }
-
-  /** The sorted (path, length, mtime) listing [[fileStatusFp]] folds —
-    * exposed separately so [[docsSliceSnapshot]] can fold the subset of
-    * files that carry old-slice rows.
-    */
-  private def fileStatusList(dir: String, table: String)(
-      implicit s: SparkSession): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    if (fs.getFileStatus(p).isDirectory) {
-      val base = p.toUri.getPath
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        // hidden check on every RELATIVE path component, not just the
-        // leaf: listFiles(_, true) recurses into _temporary/... left by
-        // a dead or concurrent writer, and part files under it have
-        // ordinary names — fingerprinting them would churn the snapshot
-        // id (rebuild on residue, rebuild again on cleanup) and could
-        // capture a mid-write table state the flat listing never saw
-        val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-        val hidden = rel.split('/')
-          .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-        if (!hidden)
-          files += ((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-    } else {
-      val st = fs.getFileStatus(p)
-      files += ((st.getPath.toString, st.getLen, st.getModificationTime))
-    }
-    files.sortBy(_._1).toSeq
-  }
-
-  /** Human-readable tag + a hash of the RAW dir string: the readable
-    * part alone is lossy (runs of non-alphanumerics collapse to "_",
-    * so /data/sf0.1 and /data/sf0_1 would share a stage name on the
-    * shared index root and permanently thrash each other's snapshots —
-    * correct but rebuild-per-run); the hex suffix makes the stage
-    * identity collision-free.
-    */
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_") +
-      "_" + (dir.hashCode & 0x7fffffff).toHexString
+  private def embFp(s: SparkSession, dir: String): (Long, String) =
+    Fingerprint.table(s, dir, "embeddings.parquet", "vec_id", "embedding")
 
   /** The 1-bit multiprobe mask set (identity + each single-bit flip) —
     * the ONE definition both the driver-side probe expansion (s04) and
@@ -1310,7 +1007,7 @@ object SimilarityQueries {
     implicit val sp = s
     import sp.implicits._
     val tables = 8
-    val (n, snapBase) = embSnapshot(dir)
+    val (n, snapBase) = embFp(s, dir)
     val bits = lshBits(n)
     val planes = lshPlanes(1100, tables, bits, dim = 64)
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
@@ -1320,9 +1017,9 @@ object SimilarityQueries {
     // 8-projection pass over every embedding per execution, twice (the
     // multiprobe side repeated it with flips). One committed table now
     // carries the exact buckets, marker-validated like the others...
-    val exact = validatedStage(s, ck = graft.exec.Checkpoint(annIndexRoot, "ann-index"),
-        stageName = s"nd8_${dirTag(dir)}", snap = s"$snapBase-nd-b$bits-p2",
-        expectedRows = n * tables) {
+    val key = Fingerprint.key("nd8", dir, snapBase, s"nd-b$bits-p2")
+    val exact = Checkpoint.Indexes.stage(s, key.name, key.snapshot,
+        expectedRows = Some(n * tables)) {
       spreadBuild(e.flatMap { case (id, v) =>
         (0 until tables).map(t => (id, t, lshBucket(v, planes(t))))
       }.toDF("vec_id", "tbl", "bucket"))
@@ -1430,62 +1127,54 @@ object SimilarityQueries {
     * (vec_id, embedding, cid) assignment table (cid-partitioned) and the
     * collected centroids — shared by [[annIvf]] (probe path) and
     * [[clusterStats]] (s11: the quantizer read as an analytics table).
-    * k is env-tunable for the scale probe only; stage names + snapshots
-    * carry k so probe runs never collide with the pinned-index stages.
     */
   private[graft] def ivfIndex(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
     implicit val sp = s
     import sp.implicits._
-    val k = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "16").toInt
+    val k = ivfK
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
-    val (n, _) = embSnapshot(dir)
-    val (centStage, snap) = ivfCentIdentity(dir, k)
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    val (seedN0, fromMarker) = ivfSeedCount(s, ck, centStage, snap, dir, k)
-    require(seedN0 > 0,
-      s"s07 IVF: no quantizer seed vectors (expected rows with vec_id < $k)")
-    def buildCent(): DataFrame = {
+    // The centroid table has one row per seed, #(vec_id < k) — not
+    // min(n, k): nothing guarantees dense ids from 0. A warm query is
+    // served on the committed marker alone (no seed count job — round-4
+    // VERDICT #2); a cold build reads the seeds through a pushed Column
+    // predicate (the few row groups holding them, not the corpus).
+    val cent = ivfKey(s, dir, "cent")
+    val centroidRows = Checkpoint.Indexes.stage(s, cent.name, cent.snapshot) {
       val seed: Array[Array[Double]] =
         embsBelow(dir, k).collect().sortBy(_._1).map(_._2.map(_.toDouble).toArray)
+      require(seed.nonEmpty,
+        s"s07 IVF: no quantizer seed vectors (expected rows with vec_id < $k)")
       lloyd(e, seed, iters = 2).zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cid", "centroid")
-    }
-    // Centroid-stage validation (round-3 ADVICE: a torn overwrite on the
-    // shared unlocked root once served a short centroid table with no
-    // detection). COLD path: the marker's rows compare against the
-    // independent pushed-count expectation (validatedStage). WARM path:
-    // seedN came FROM the marker, so a marker-rows compare would be
-    // circular (true by construction) — instead the marker validates
-    // against the centroid rows the query collects anyway: a genuine
-    // data-vs-marker check with zero extra jobs.
-    var centDf =
-      if (fromMarker) ck.stage(s, centStage, snap)(buildCent())
-      else validatedStage(s, ck, centStage, snap, expectedRows = seedN0)(buildCent())
-    var centroidRows = centDf.collect()
-    var seedN = seedN0
-    if (fromMarker && centroidRows.length != seedN0.toInt) {
-      // the marker's rows line disagrees with the data it gates (torn
-      // data overwrite, or a rows line corrupted into another parseable
-      // value) — rebuild against the independent pushed count
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"s07 centroid stage: marker rows=$seedN0 but table has " +
-          s"${centroidRows.length} rows — rebuilding")
-      ck.invalidate(s, centStage)
-      seedN = embs(dir).filter(col("vec_id") < k).select("vec_id").count()
-      centDf = validatedStage(s, ck, centStage, snap, expectedRows = seedN)(buildCent())
-      centroidRows = centDf.collect()
-    }
-    require(centroidRows.length == seedN.toInt,
-      s"s07 centroid stage: ${centroidRows.length} rows vs expected $seedN")
+    }.collect()
+    // round-3 ADVICE (a torn overwrite on the shared unlocked root once
+    // served a short centroid table with no detection): the marker's rows
+    // must match the centroid rows the query collects anyway — a genuine
+    // data-vs-marker check with zero extra jobs; a mismatch means another
+    // writer is rewriting the stage under this read
+    require(Checkpoint.Indexes.committedRowsFor(s, cent.name, cent.snapshot)
+        .contains(centroidRows.length.toLong),
+      s"s07 centroid stage: ${centroidRows.length} rows disagree with the committed marker")
     val centroids: Array[Array[Double]] = centroidRows
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2)
-    val assigned = validatedStage(s, ck, s"ivf${k}_assign_${dirTag(dir)}", snap,
-        expectedRows = n, partitionByCols = Seq("cid")) {
+    val assign = ivfKey(s, dir, "assign")
+    val assigned = Checkpoint.Indexes.stage(s, assign.name, assign.snapshot,
+        partitionByCols = Seq("cid"), expectedRows = Some(embFp(s, dir)._1)) {
       e.map { case (id, v) => (id, v, nearestCids(v, centroids, 1).head) }
         .toDF("vec_id", "embedding", "cid")
     }
     (assigned, centroids)
   }
+
+  /** k is env-tunable for the scale probe only. */
+  private def ivfK: Int = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "16").toInt
+
+  /** s07's stage keys — `part` is "cent" (the centroid table) or "assign"
+    * (the inverted lists); names and snapshots carry k so probe runs
+    * never collide with the pinned-index stages.
+    */
+  private[graft] def ivfKey(s: SparkSession, dir: String, part: String): StageKey =
+    Fingerprint.key(s"ivf${ivfK}_$part", dir, embFp(s, dir)._2, s"k${ivfK}i2")
 
   private val annIvf: Q = (s, dir) => {
     implicit val sp = s
@@ -1537,9 +1226,10 @@ object SimilarityQueries {
     // the int8 table is the third persisted ANN index (with s04's LSH
     // buckets and s07's inverted lists): quantization commits once per
     // embeddings snapshot; every query scans the 4x-smaller table
-    val (n, snapBase) = embSnapshot(dir)
-    val quant = validatedStage(s, graft.exec.Checkpoint(annIndexRoot, "ann-index"),
-        s"sq8_${dirTag(dir)}", s"$snapBase-sq8-p2", expectedRows = n) {
+    val (n, snapBase) = embFp(s, dir)
+    val key = Fingerprint.key("sq8", dir, snapBase, "sq8-p2")
+    val quant = Checkpoint.Indexes.stage(s, key.name, key.snapshot,
+        expectedRows = Some(n)) {
         spreadBuild(e.map { case (id, v) =>
           val maxAbs = math.max(v.iterator.map(x => math.abs(x.toDouble)).max, 1e-30)
           val scale = 127.0 / maxAbs
@@ -1778,7 +1468,7 @@ object SimilarityQueries {
       .groupBy("cid")
       .agg(count(lit(1)).as("n_vecs"), sum("cos1e6").as("cossum"))
       // intentional global window over the k-row aggregate (see
-      // scaladoc); its WindowExec warning is suppressed, documented, in
+      // scaladoc); its WindowExec warning is filtered, documented, in
       // GraftExtensions — see t16's note for why the alternatives are
       // worse
       .withColumn("share",

@@ -345,8 +345,8 @@ object TextQueries {
     def r(c: Column, s0: Int): Column = floor(c * s0 + 0.5) / s0
     // The global window is intentional and runs over the k-row
     // per-language AGGREGATE, not the corpus (see the scaladoc). Its
-    // empty partition spec makes WindowExec warn; the warning is
-    // suppressed once, documented, in GraftExtensions — a constant
+    // empty partition spec makes WindowExec warn; that one message is
+    // filtered, documented, in GraftExtensions — a constant
     // partition key gets constant-folded away, and a 1-row-aggregate
     // cross join would recompute the corpus pass for the broadcast
     // build (exchange reuse does not cross into broadcast builds).
@@ -697,7 +697,7 @@ object TextQueries {
     "t16_domain_mix" ->
       """WITH l AS (
         |  SELECT lang,
-        |    sum(len(regexp_split_to_array(trim(text), '\s+'))) AS lang_tokens
+        |    CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS lang_tokens
         |  FROM documents GROUP BY 1),
         |t AS (
         |  SELECT lang, lang_tokens,
@@ -764,7 +764,7 @@ object TextQueries {
         |c AS (SELECT span, count(*) AS n_occ FROM sp GROUP BY 1)
         |SELECT sp.doc_id,
         |  count(*) AS n_spans,
-        |  sum(CASE WHEN c.n_occ >= 2 THEN 1 ELSE 0 END) AS n_dup_spans,
+        |  CAST(sum(CASE WHEN c.n_occ >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
         |  floor(CAST(sum(CASE WHEN c.n_occ >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*) * 10000 + 0.5) / 10000 AS dup_fraction
         |FROM sp JOIN c USING (span)

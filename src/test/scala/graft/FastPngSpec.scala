@@ -64,6 +64,23 @@ class FastPngSpec extends AnyFunSuite {
     assert(b.take(4).map(x => f"$x%02x").mkString == "89504e47")
   }
 
+  test("incompressible pixels take the grow path and decode pixel-identical") {
+    // random samples do not deflate, so the compressed stream outgrows
+    // the raw-size buffer — the path the gradient cases above never reach
+    val (w, h) = (512, 512)
+    val px = new Array[Byte](w * h)
+    new scala.util.Random(7).nextBytes(px)
+    val png = graft.functions.FastPng.encodeGray(w, h, px)
+    // signature 8 + IHDR 25 + IDAT header/crc 12 + IEND 12 around the
+    // zlib stream; the non-grow path caps that stream at raw + 64 bytes
+    val zlen = png.length - 57
+    assert(zlen > (w + 1) * h + 64, s"grow path not reached: zlib stream $zlen bytes")
+    val img = decode(png)
+    assert(img.getWidth == w && img.getHeight == h)
+    for (y <- 0 until h; x <- 0 until w)
+      assert(img.getRaster.getSample(x, y, 0) == (px(y * w + x) & 0xff), s"pixel ($x,$y)")
+  }
+
   test("negative modulo seeds keep byte parity with setSample semantics") {
     // setSample truncates an Int sample to the low 8 bits; (v % 256)
     // is negative for negative seeds and .toByte keeps the same low

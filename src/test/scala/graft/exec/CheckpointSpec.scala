@@ -95,6 +95,15 @@ class CheckpointSpec extends SparkSpec {
     assert(out2.count() == 0)
   }
 
+  // Rewritten via java.nio, so Hadoop's LocalFileSystem checksum sidecar
+  // goes stale — drop it or the re-read fails ChecksumException.
+  private def plantMarker(root: String, stage: String, content: String): Unit = {
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/$stage/_SUCCESS_SNAPSHOT"), content)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$root/$stage/._SUCCESS_SNAPSHOT.crc"))
+  }
+
   test("marker records the committed row count for O(1) stage validation") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-ckpt-rows").toString
@@ -102,26 +111,80 @@ class CheckpointSpec extends SparkSpec {
     ckpt.stage(spark, "s", "snap-1") { Seq(1, 2, 3).toDF("v") }
     // the rows line lets ANN index readers validate a shared-root stage
     // without the O(N) data scan the round-3 s04 read-back paid per query
-    assert(ckpt.committedRowCount(spark, "s").contains(3L))
     assert(ckpt.isComplete(spark, "s", "snap-1"))
-    // snapshot-checked variant: rows only surface when the marker's
-    // snapshot line matches the snapshot being validated — one atomic
-    // marker read, so a concurrent writer committing the same stage for
-    // a DIFFERENT snapshot can't make the rows check pass (round-4
+    // snapshot-checked: rows only surface when the marker's snapshot
+    // line matches the snapshot being validated — one atomic marker
+    // read, so a concurrent writer committing the same stage for a
+    // DIFFERENT snapshot can't make the rows check pass (round-4
     // ADVICE #3)
     assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(3L))
     assert(ckpt.committedRowsFor(spark, "s", "snap-2").isEmpty)
-    // legacy marker (pre-rows format): still complete, but row count is
-    // None — validating readers treat that as unvalidatable and rebuild.
-    // (Rewritten via java.nio, so Hadoop's LocalFileSystem checksum
-    // sidecar goes stale — drop it or the re-read fails ChecksumException.)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/s/_SUCCESS_SNAPSHOT"),
-      s"snap-1@${Checkpoint.PipelineVersion}")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$root/s/._SUCCESS_SNAPSHOT.crc"))
-    assert(ckpt.committedRowCount(spark, "s").isEmpty)
-    assert(ckpt.isComplete(spark, "s", "snap-1"))
+    // a marker with the snapshot line but no rows line (torn, or the
+    // pre-rows format) is NOT complete: the stage rebuilds once and
+    // rewrites a clean marker
+    plantMarker(root, "s", s"snap-1@${Checkpoint.PipelineVersion}")
+    assert(ckpt.committedRowsFor(spark, "s", "snap-1").isEmpty)
+    assert(!ckpt.isComplete(spark, "s", "snap-1"))
+    var builds = 0
+    def rerun() = ckpt.stage(spark, "s", "snap-1") { builds += 1; Seq(1, 2, 3).toDF("v") }
+    assert(rerun().count() == 3)
+    assert(builds == 1)
+    assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(3L))
+    rerun()
+    assert(builds == 1, "a rebuilt stage with a clean marker was rebuilt again")
+  }
+
+  test("an expectedRows mismatch rebuilds once; a rebuild still wrong fails hard") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-ckpt-expected").toString
+    val ckpt = Checkpoint(root, runId = "run-x")
+    var builds = 0
+    def stage(expected: Long) = ckpt.stage(spark, "idx", "snap-1", expectedRows = Some(expected)) {
+      builds += 1
+      Seq(1, 2, 3).toDF("v")
+    }
+    stage(3)
+    stage(3)
+    assert(builds == 1)
+    // a short table committed under this snapshot (torn overwrite, or a
+    // concurrent writer's race) invalidates and rebuilds once
+    plantMarker(root, "idx", s"snap-1@${Checkpoint.PipelineVersion}\nrows=2")
+    assert(stage(3).count() == 3)
+    assert(builds == 2)
+    assert(ckpt.committedRowsFor(spark, "idx", "snap-1").contains(3L))
+    // a rebuild that is still wrong is a hard failure, after ONE rebuild
+    val err = intercept[IllegalArgumentException](stage(4))
+    assert(err.getMessage.contains("still invalid after rebuild"), err.getMessage)
+    assert(builds == 3)
+  }
+
+  test("a tail append recomputes the incremental cutoff and the documents fingerprint") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-fp-append").toString
+    def write(ids: Seq[Long], mode: String): Unit =
+      ids.map(i => (i, s"text $i")).toDF("doc_id", "text").coalesce(1)
+        .write.mode(mode).parquet(s"$dir/documents.parquet")
+    def docsFp() = Fingerprint.table(spark, dir, "documents.parquet", "doc_id", "text")
+    write(0L until 40L, "overwrite")
+    val cutoff0 = graft.queries.SimilarityQueries.incrementalCutoff(spark, dir)
+    val (n0, fp0) = docsFp()
+    assert(cutoff0 == 27 && n0 == 40)
+    // unchanged table: the memo serves the same values
+    assert(graft.queries.SimilarityQueries.incrementalCutoff(spark, dir) == cutoff0)
+    assert(docsFp() == ((n0, fp0)))
+    // an ingest batch lands as a parquet append: both are recomputed
+    write(40L until 100L, "append")
+    assert(graft.queries.SimilarityQueries.incrementalCutoff(spark, dir) == 81)
+    val (n1, fp1) = docsFp()
+    assert(n1 == 100 && fp1 != fp0)
+    // the memo is per session: same table, new session -> fresh compute
+    var computed = 0
+    def probe(sp: org.apache.spark.sql.SparkSession) =
+      Fingerprint.memo(sp, dir, "documents.parquet", "spec-probe") { _ => computed += 1 }
+    probe(spark); probe(spark)
+    assert(computed == 1)
+    probe(spark.newSession())
+    assert(computed == 2)
   }
 
   test("salted join rejects build-duplicating outer join types") {

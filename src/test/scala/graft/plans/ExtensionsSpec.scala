@@ -77,6 +77,35 @@ class ExtensionsSpec extends SparkSpec with PropChecks {
     } finally spark.experimental.extraOptimizations = before
   }
 
+  test("WindowExec log filter drops only the single-partition warning") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    GraftExtensions.singlePartitionWindowFilter
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("window-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val lc = ctx.getConfiguration.getLoggerConfig(GraftExtensions.WindowExecLogger)
+    lc.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try {
+      // Spark's own warning, from a real unpartitioned window
+      spark.range(10).withColumn("t", sum("id").over(
+        org.apache.spark.sql.expressions.Window.partitionBy())).collect()
+      val log = org.slf4j.LoggerFactory.getLogger(GraftExtensions.WindowExecLogger)
+      log.warn("No Partition Defined for Window operation! (planted)")
+      log.warn("a different WindowExec warning")
+      assert(seen.toArray.toSeq == Seq("a different WindowExec warning"))
+    } finally {
+      lc.removeAppender("window-capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
+
   test("rule leaves non-matching shapes alone (idx != 0, legacy size)") {
     import spark.implicits._
     val before = spark.experimental.extraOptimizations

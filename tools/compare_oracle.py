@@ -16,27 +16,28 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 fails = 0
-enc_warns = []
 for name, sql in sorted(oracle.items()):
     try:
         got = pd.read_parquet(f"{outdir}/{name}")
         exp = con.execute(sql).fetchdf()
         # Encoding-faithfulness check (round-5 VERDICT "What's wrong"
         # #3): the driver's comparator hashes value ENCODINGS, so a
-        # DuckDB output column that arrives as HUGEINT/decimal128
-        # (e.g. an uncast integer sum()) hash-fails against Spark's
-        # BIGINT even when every value matches — and the value compare
-        # below cannot see it. Surface it loudly. It is a WARNING, not
-        # a failure, while the two known-affected oracles (t16/t17)
-        # are measurement-frozen; once their CAST(... AS BIGINT) fix
-        # lands in a build round, flip this to a hard failure.
+        # DuckDB output column that arrives as HUGEINT (e.g. an uncast
+        # integer sum()) hash-fails against Spark's BIGINT even when
+        # every value matches — and the value compare below cannot see
+        # it. A hard failure, limited to HUGEINT: DECIMAL oracles that
+        # agree with the engine on purpose must not trip it.
         try:
             hug = [d[0] for d in con.execute(f"DESCRIBE {sql}").fetchall()
-                   if d[1].upper().startswith(("HUGEINT", "DECIMAL"))]
+                   if d[1].upper().startswith("HUGEINT")]
         except Exception:
-            hug = []  # DESCRIBE rejects some set-op shapes; warning-only
+            hug = []  # DESCRIBE rejects some set-op shapes
         if hug:
-            enc_warns.append((name, hug))
+            print(f"FAIL {name}: ENCODING DuckDB emits HUGEINT for {hug} — "
+                  "the driver's encoding-sensitive hash fails even when values "
+                  "match; CAST(... AS BIGINT) in the oracle")
+            fails += 1
+            continue
     except Exception as e:
         print(f"FAIL {name}: {e}")
         fails += 1
@@ -69,9 +70,5 @@ for name, sql in sorted(oracle.items()):
             break
     if ok:
         print(f"OK   {name}: {len(got)} rows")
-for name, cols in enc_warns:
-    print(f"ENCODING-WARN {name}: DuckDB emits HUGEINT/DECIMAL for {cols} — "
-          "values may match while the driver's encoding-sensitive hash fails "
-          "(cast to BIGINT/DOUBLE in the oracle once it is unfrozen)")
 print("FAILURES:", fails)
 sys.exit(1 if fails else 0)
